@@ -18,16 +18,36 @@ from __future__ import annotations
 
 import re
 from collections.abc import Callable
+from contextvars import ContextVar
+from dataclasses import dataclass
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+
+@dataclass(frozen=True)
+class RewriteModes:
+    """Per-statement switches of the dialect rewrite. Statement settings
+    give the first three; only the retries of ``session.run_databend_sql``
+    set the last three, for what the SQL text cannot tell (a VARIANT
+    column reads like an array or map column)."""
+
+    dt_strict: bool = False  # enable_strict_datetime_parser: ISO only
+    dt_auto: bool = False  # enable_auto_detect_datetime_format
+    vector_f32: bool = False  # VECTOR(N) columns: distances in float32
+    variant_get: bool = False  # get() as JSONB access
+    variant_array: bool = False  # array functions over __va_* JSONB
+    lambda_safe: bool = False  # JVM-only templates (no Python UDF in lambdas)
+
+
+# modes of the rewrite in progress: only sqlgen.rewrite_databend_sql sets
+# it, for the length of the call; the macros below read it
+REWRITE_MODES: ContextVar[RewriteModes] = ContextVar(
+    "rewrite_modes", default=RewriteModes()
+)
+
 # --- pure renames: databend name -> spark SQL function name ----------------
 # (sources: function_list.txt aliases block; scalars/{string,timestamp,…})
-# forced by the testkit when Spark rejects a Python UDF inside a lambda
-# body — macros re-expand with JVM-only templates
-LAMBDA_SAFE_MODE: list[bool] = [False]
-
 RENAME: dict[str, str] = {
     # type conversion
     "to_string": "cast_to_string",  # handled in COMPOSED (needs type arg)
@@ -350,7 +370,7 @@ SQL_MACROS: dict[str, str] = {
                     sep=_literal_text(args[1])[1:-1].replace("'", "''"),
                 )
             )
-            if LAMBDA_SAFE_MODE[0]
+            if REWRITE_MODES.get().lambda_safe
             and _literal_text(args[1]).startswith("'")
             else "__split(CAST({0} AS STRING), CAST({1} AS STRING))".format(
                 *args
@@ -1473,11 +1493,6 @@ def _last_day(args: list[str]) -> str | None:
 
 SQL_MACROS["last_day"] = _last_day
 
-# datetime parse mode, bound per statement by the SLT runner from
-# enable_strict_datetime_parser / enable_auto_detect_datetime_format
-# (reference settings; query/functions/02_0012 auto-detect suite)
-DT_PARSE_MODE = {"strict": False, "auto": False}
-
 # auto-detect datetime parsing (reference enable_auto_detect_datetime_
 # format): try a curated format chain, then epoch-number fallback
 _DATE_FMTS = ["yyyy-M-d", "M/d/yyyy", "dd-MMM-yyyy", "MMM d, yyyy",
@@ -1497,10 +1512,11 @@ def _try_to_date(args: list[str]) -> str | None:
     if len(args) != 1:
         return None
     x = args[0]
-    if DT_PARSE_MODE["strict"] and not DT_PARSE_MODE["auto"]:
+    modes = REWRITE_MODES.get()
+    if modes.dt_strict and not modes.dt_auto:
         # strict parser without auto-detect: zero-padded ISO only
         return f"try_to_d\x03ate({x}, 'yyyy-MM-dd')"
-    if DT_PARSE_MODE["auto"]:
+    if modes.dt_auto:
         # Snowflake-style detection: pure-numeric text is epoch DAYS
         # (saturating to 0001-01-01 outside the date domain), tried
         # BEFORE compact formats so '20240305' stays epoch-based
@@ -1530,13 +1546,14 @@ def _try_to_timestamp(args: list[str]) -> str | None:
     if len(args) != 1:
         return None
     x = args[0]
-    if DT_PARSE_MODE["strict"] and not DT_PARSE_MODE["auto"]:
+    modes = REWRITE_MODES.get()
+    if modes.dt_strict and not modes.dt_auto:
         # strict parser without auto-detect: zero-padded ISO only
         return (
             f"try_to_t\x03imestamp({x},"
             " 'yyyy-MM-dd HH:mm:ss[.SSSSSS]')"
         )
-    if DT_PARSE_MODE["auto"]:
+    if modes.dt_auto:
         return _try_to_timestamp_auto(x)
     # Spark ≥3 rejects day-name patterns when parsing — strip the weekday
     # prefix textually and parse the remainder instead of using EEE
@@ -2501,15 +2518,6 @@ def _histogram(args: list[str]) -> str | None:
     return None
 
 
-# when True (runner retry pass), get() always takes the variant path —
-# set by testkit on DATATYPE_MISMATCH from the element_at interpretation
-VARIANT_GET_MODE: list[bool] = [False]
-
-# set by the runner when the statement references VECTOR-typed columns
-# (reference types/vector.rs stores float32 — distances compute in f32)
-VECTOR_F32_MODE: list[bool] = [False]
-
-
 def _vec_arg_to_array(a: str) -> str:
     """A vector argument → ARRAY<DOUBLE> expression: json-text sources
     (string literals / parse_json) go through from_json, arrays CAST."""
@@ -2534,7 +2542,7 @@ def _vec_arg_to_array(a: str) -> str:
 def _vec_distance_macro(metric: str, args: list[str]) -> str | None:
     if len(args) != 2:
         return None
-    f32 = VECTOR_F32_MODE[0] or bool(
+    f32 = REWRITE_MODES.get().vector_f32 or bool(
         re.search(
             r"vector\s*\(|ARRAY\s*[<(]\s*FLOAT\b|AS\s+FLOAT\b",
             args[0] + " " + args[1],
@@ -2555,7 +2563,7 @@ SQL_MACROS["inner_product"] = lambda a: _vec_distance_macro("dot", a)
 SQL_MACROS["vector_dims"] = "size({0})"
 SQL_MACROS["vector_norm"] = lambda a: (
     f"__vec_norm(CAST(({a[0]}) AS ARRAY<DOUBLE>),"
-    f" {str(bool(VECTOR_F32_MODE[0])).lower()})"
+    f" {str(REWRITE_MODES.get().vector_f32).lower()})"
     if len(a) == 1
     else None
 )
@@ -2770,7 +2778,7 @@ def _to_timestamp_tz_sql(args: list[str], fallback: str) -> str | None:
     fn = "__ts_tz_text"
     if "try" in fallback:
         fn += "_try"
-    if DT_PARSE_MODE["auto"]:
+    if REWRITE_MODES.get().dt_auto:
         fn += "_auto"
     if lit.startswith("'") and lit.endswith("'"):
         # literal text keeps its wall time; a missing offset binds the
@@ -2879,15 +2887,11 @@ def _regexp_split_sql(args: list[str], explode: bool) -> str | None:
     return any(_JSON_ENC_VARIANTISH.match(a.strip()) for a in args)
 
 
-# forced by the testkit's DATATYPE_MISMATCH retry: a variant COLUMN is
-# textually indistinguishable from an array column, so the first attempt
-# uses the plain array template and the retry re-rewrites with every
-# array function routed to its __va_* jsonb implementation
-VARIANT_ARRAY_MODE: list[bool] = [False]
-
-
 def _any_variantish(args: list[str]) -> bool:
-    if VARIANT_ARRAY_MODE[0]:
+    # a variant COLUMN is textually indistinguishable from an array
+    # column: the first attempt uses the plain array template, and the
+    # executor's type-error retry re-rewrites with variant_array set
+    if REWRITE_MODES.get().variant_array:
         return True
     return any(_JSON_ENC_VARIANTISH.match(a.strip()) for a in args)
 
@@ -2896,8 +2900,8 @@ def _va_dispatch(va_tpl: str, plain):
     """Array-function dispatcher: textually variant arguments route to
     the __va_* JSONB implementation (reference scalars/variant.rs,
     0-based multiset semantics); native Spark arrays keep the plain
-    template. Runtime variant columns are caught by the testkit's
-    type-error retry."""
+    template. Runtime variant columns are caught by the type-error retry
+    of ``session.run_databend_sql``."""
 
     def build(args: list[str]) -> str | None:
         if _any_variantish(args):
@@ -2974,11 +2978,11 @@ def _get_dispatch(args: list[str]) -> str | None:
     """get(container, key_or_idx): arrays/maps → element_at; variant
     expressions (parse_json / chained accessors / NULL) → JSONB access
     (reference scalars/variant.rs get). VARIANT columns can't be told
-    apart textually — the testkit retries with VARIANT_GET_MODE on
-    analysis-type errors."""
+    apart textually — ``session.run_databend_sql`` retries with the
+    ``variant_get`` mode on analysis-type errors."""
     if len(args) != 2:
         return None
-    if VARIANT_GET_MODE[0] or _VARIANTISH.match(args[0]):
+    if REWRITE_MODES.get().variant_get or _VARIANTISH.match(args[0]):
         return _variant_access_sql(args[0], "a", args[1], False)
     return f"try_element_at({args[0]}, {args[1]})"
 

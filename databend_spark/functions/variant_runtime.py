@@ -2362,16 +2362,20 @@ def jq_list(filter_text, input):  # noqa: A002
     return [_canon(out) for out in jq_run(filter_text, doc)]
 
 
-# applicationIds already carrying the UDF registrations — re-registering
+# sessions already carrying the UDF registrations — re-registering
 # 60+ Python UDFs costs ~0.3-0.5s of Py4J round-trips per call, which
-# lands on EVERY suite-query invocation (r3 bench regression). appIds are
-# never reused, so registration state can be memoized process-side.
+# lands on EVERY suite-query invocation (r3 bench regression). Session
+# UUIDs are never reused, so registration state can be memoized
+# process-side.
 _UDFS_REGISTERED: set[str] = set()
 
 
 def _session_key(spark: SparkSession) -> str:
+    """Memo key of a session. Per session, not per application: UDFs and
+    confs are session-scoped, and ``spark.newSession()`` shares the
+    application but starts without them."""
     try:
-        return spark.sparkContext.applicationId
+        return spark._jsparkSession.sessionUUID()
     except Exception:  # noqa: BLE001
         return str(id(spark))
 

@@ -19,8 +19,13 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import os
+import re
+import time
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
+
+from databend_spark.functions.registry import RewriteModes
 
 TPCH_TABLES = (
     "region",
@@ -142,7 +147,7 @@ _SESSION_CONFS = (
 )
 
 
-# appIds whose confs/UDFs are already ensured — ensure_session_confs runs
+# sessions whose confs/UDFs are already ensured — ensure_session_confs runs
 # on EVERY suite-query call (via register_tables), and each conf.get is a
 # py4j round trip; one check per session is enough (runtime conf changes
 # by the caller are their own responsibility, as before: we only ever
@@ -158,10 +163,12 @@ def ensure_session_confs(spark: SparkSession) -> None:
     driver's ``events.parquet``/``orders.parquet`` fails with
     PARQUET_TYPE_ILLEGAL (TIMESTAMP(NANOS)).
     """
-    try:
-        sid = spark.sparkContext.applicationId
-    except Exception:  # noqa: BLE001
-        sid = str(id(spark))
+    from databend_spark.functions.variant_runtime import (
+        _session_key,
+        register_variant_udfs,
+    )
+
+    sid = _session_key(spark)
     if sid in _CONFS_ENSURED:
         return
     if len(_CONFS_ENSURED) > 8:
@@ -176,10 +183,6 @@ def ensure_session_confs(spark: SparkSession) -> None:
     # variant dialect accessors (->, ->>, #>, get/get_path/…) — cheap,
     # idempotent; only referenced by rewritten dialect SQL
     try:
-        from databend_spark.functions.variant_runtime import (
-            register_variant_udfs,
-        )
-
         register_variant_udfs(spark)
     except Exception:
         ok = False
@@ -297,6 +300,79 @@ def load_table(spark: SparkSession, path: str) -> DataFrame:
     return df.select(*cols)
 
 
+_ARRAY_FN = re.compile(r"\b(?:array_\w+|contains|json_array_\w+)\s*\(", re.I)
+_GET_FN = re.compile(r"\bget\s*\(", re.I)
+
+
+def _retries(query: str, modes: RewriteModes, msg: str) -> list:
+    """The retry rewrites for a first attempt that failed with ``msg``,
+    in order, as thunks: each is built only when reached, and one that
+    raises fails only its own attempt."""
+    from databend_spark import sqlgen
+
+    def attempt(transform=lambda q: q, **forced):
+        return lambda: sqlgen.rewrite_databend_sql(
+            transform(query), replace(modes, **forced)
+        )
+
+    out = []
+    if "COLUMN_IS_NOT_VARIANT_TYPE" in msg:
+        out += [
+            attempt(sqlgen.variant_paths_to_struct),
+            attempt(
+                lambda q: sqlgen.variant_paths_to_json(
+                    sqlgen.variant_paths_to_access(q)
+                )
+            ),
+            attempt(sqlgen.variant_paths_to_json),
+        ]
+    type_error = "DATATYPE_MISMATCH" in msg or "UNEXPECTED_INPUT_TYPE" in msg
+    if type_error and _ARRAY_FN.search(query):
+        out.append(attempt(variant_array=True))
+    if "LAMBDA_FUNCTION_WITH_PYTHON_UDF" in msg:
+        out.append(attempt(lambda_safe=True))
+    if type_error and _GET_FN.search(query) and 'has the type "STRING"' in msg:
+        out.append(attempt(variant_get=True))
+    return out
+
+
+def run_databend_sql(
+    spark: SparkSession, query: str, modes: RewriteModes = RewriteModes()
+) -> DataFrame:
+    """Run one Databend-SQL statement: rewrite it under ``modes`` and
+    hand it to Spark. When Spark rejects the rewrite, retry with the
+    readings the SQL text cannot decide, in this order:
+
+    1. ``COLUMN_IS_NOT_VARIANT_TYPE`` — ``col:path`` over a non-VARIANT
+       column: as struct field access, then as ``__variant_access`` over
+       JSON text, then as ``get_json_object`` over JSON text;
+    2. a type error with an array function in the query — every array
+       function over the JSONB runtime (``variant_array``);
+    3. ``LAMBDA_FUNCTION_WITH_PYTHON_UDF`` — JVM-only macro templates
+       (``lambda_safe``);
+    4. a type error naming a STRING argument with ``get()`` in the
+       query — ``get`` as JSONB access (``variant_get``).
+
+    Each retry keeps the caller's statement modes, and a retry whose text
+    equals the first rewrite is skipped. When every attempt fails, the
+    first error is raised."""
+    from databend_spark import sqlgen
+
+    first = sqlgen.rewrite_databend_sql(query, modes)
+    try:
+        return spark.sql(first)
+    except Exception as e:  # noqa: BLE001
+        err = e
+    for build in _retries(query, modes, str(err)):
+        try:
+            text = build()
+            if text != first:
+                return spark.sql(text)
+        except Exception:  # noqa: BLE001
+            continue
+    raise err
+
+
 class SessionContext:
     """bendpy-style facade over SparkSession.
 
@@ -307,6 +383,9 @@ class SessionContext:
 
     def __init__(self, spark: SparkSession | None = None):
         self.spark = spark or get_spark()
+        # confs and the dialect's runtime UDFs (__parse_json_strict,
+        # __variant_access, …); memoised per session
+        ensure_session_confs(self.spark)
         self._copy_history: dict[str, set[str]] = {}
         # system-catalog state (reference: src/query/storages/system/src/
         # {query_log,streams,tasks,stages}_table.rs)
@@ -354,15 +433,11 @@ class SessionContext:
 
     # -- SQL ---------------------------------------------------------------
     def sql(self, query: str) -> DataFrame:
-        """Run SQL. Databend-dialect constructs are rewritten first
-        (see ``databend_spark.sqlgen``); the Spark-compatible core goes
-        straight to Catalyst. Every call lands in system.query_log
+        """Run SQL through :func:`run_databend_sql`: Databend-dialect
+        constructs are rewritten first (see ``databend_spark.sqlgen``);
+        the Spark-compatible core goes straight to Catalyst. Every call lands in system.query_log
         (reference: storages/system/src/query_log_table.rs — theirs logs
         start/finish events; one row per query is the useful core)."""
-        import time
-
-        from databend_spark.sqlgen import rewrite_databend_sql
-
         t0 = time.time()
         if self._agg_indexes:
             from databend_spark.operators.agg_index import try_rewrite
@@ -370,43 +445,17 @@ class SessionContext:
             hit = try_rewrite(query, self._agg_indexes)
             if hit is not None:
                 query = hit
+        status, error = "ok", ""
         try:
-            df = self.spark.sql(rewrite_databend_sql(query))
+            return run_databend_sql(self.spark, query)
         except Exception as e:
-            # Databend `col:path` reads named tuples AND json text;
-            # Spark's native `:` needs true VARIANT — retry both forms
-            if "COLUMN_IS_NOT_VARIANT_TYPE" in str(e):
-                from databend_spark.sqlgen import (
-                    variant_paths_to_json,
-                    variant_paths_to_struct,
-                )
-
-                for alt in (
-                    variant_paths_to_struct(query),
-                    variant_paths_to_json(query),
-                ):
-                    try:
-                        df = self.spark.sql(rewrite_databend_sql(alt))
-                        break
-                    except Exception:
-                        continue
-                else:
-                    df = None
-                if df is not None:
-                    self._query_log.append(
-                        (len(self._query_log) + 1, query, "ok", "",
-                         t0, time.time() - t0)
-                    )
-                    return df
-            self._query_log.append(
-                (len(self._query_log) + 1, query, "error",
-                 type(e).__name__, t0, time.time() - t0)
-            )
+            status, error = "error", type(e).__name__
             raise
-        self._query_log.append(
-            (len(self._query_log) + 1, query, "ok", "", t0, time.time() - t0)
-        )
-        return df
+        finally:
+            self._query_log.append(
+                (len(self._query_log) + 1, query, status, error,
+                 t0, time.time() - t0)
+            )
 
     # -- incremental-layer objects (streams / tasks / stages) --------------
     def create_stream(self, name: str, table_path: str, at_version=None):

@@ -17,6 +17,8 @@ from __future__ import annotations
 import json
 import re
 
+from databend_spark.functions.registry import REWRITE_MODES, RewriteModes
+
 _UNSUPPORTED = [
     (re.compile(r"\bCHANGES\s*\(", re.I),
      "CHANGES(...) — use databend_spark.streaming.VersionedTable.changes()"),
@@ -71,7 +73,7 @@ def variant_paths_to_json(sql: str) -> str:
     """`col:a.b`, `col:a['k.x'][0].b` → get_json_object(CAST(col AS
     STRING), '$.a[''k.x''][0].b') — the fallback when the column stores
     JSON text (Spark's native `:` demands true VARIANT). Applied on
-    retry by the runner / SessionContext."""
+    retry by ``session.run_databend_sql``."""
     masked, lits = _mask_strings(sql)
 
     def repl(m: re.Match) -> str:
@@ -3330,9 +3332,9 @@ def _rewrite_variant_ext(s: str) -> str:
         ),
         s,
     )
-    from databend_spark.functions.registry import DT_PARSE_MODE as _dtm0
-
-    _tstz_fn = "__ts_tz_text_auto" if _dtm0["auto"] else "__ts_tz_text"
+    _tstz_fn = (
+        "__ts_tz_text_auto" if REWRITE_MODES.get().dt_auto else "__ts_tz_text"
+    )
     out = _TSTZ_CAST.sub(
         lambda m: (
             f"{_tstz_fn}({_tstz_recv(m.group(1))},"
@@ -3825,9 +3827,20 @@ def _split_top_commas(text: str) -> list[str]:
     return parts
 
 
-def rewrite_databend_sql(sql: str) -> str:
+def rewrite_databend_sql(sql: str, modes: RewriteModes = RewriteModes()) -> str:
     """Rewrite the Databend-only constructs we support; raise a clear
-    error on the ones we don't (never silently mis-parse)."""
+    error on the ones we don't (never silently mis-parse).
+
+    ``modes`` holds the statement's rewrite switches; the macros read
+    them from ``REWRITE_MODES`` for the length of this call only."""
+    token = REWRITE_MODES.set(modes)
+    try:
+        return _rewrite(sql)
+    finally:
+        REWRITE_MODES.reset(token)
+
+
+def _rewrite(sql: str) -> str:
     if re.search(r"\b(timestamp|timestamp_tz)_from_parts\s*\(", sql, re.I):
         sql = _rewrite_from_parts(sql)
     if re.search(
@@ -4097,20 +4110,18 @@ def rewrite_databend_sql(sql: str) -> str:
             return f"CAST({vu} AS DOUBLE)"
         if tgt in ("date",):
             from databend_spark.functions.registry import (
-                DT_PARSE_MODE as _dtm,
                 _try_to_date as _ttd,
             )
 
-            if _dtm["auto"]:
+            if REWRITE_MODES.get().dt_auto:
                 return _ttd([f"({vu})"])
             return f"CAST({vu} AS DATE)"
         if tgt in ("datetime", "timestamp"):
             from databend_spark.functions.registry import (
-                DT_PARSE_MODE as _dtm,
                 _try_to_timestamp_auto as _tta,
             )
 
-            if _dtm["auto"]:
+            if REWRITE_MODES.get().dt_auto:
                 return _tta(f"({vu})")
             return f"CAST({vu} AS TIMESTAMP)"
         spark_t = {

@@ -14,17 +14,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from databend_spark.session import ALL_TABLES, register_tables
+from databend_spark.session import ALL_TABLES, register_tables, run_databend_sql
 from databend_spark.suite.base import register
 
 
 def _dialect_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    from databend_spark.functions.variant_runtime import register_variant_udfs
-    from databend_spark.sqlgen import rewrite_databend_sql
-
+    # register_tables also registers the dialect's variant UDFs
     register_tables(spark, sf_dir, ALL_TABLES)
-    register_variant_udfs(spark)
-    return spark.sql(rewrite_databend_sql(sql))
+    return run_databend_sql(spark, sql)
 
 
 _OBJ = (

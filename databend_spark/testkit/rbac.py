@@ -18,9 +18,9 @@ import re
 
 
 def _sql(spark, q: str):
-    from databend_spark.sqlgen import rewrite_databend_sql
+    from databend_spark.session import run_databend_sql
 
-    return spark.sql(rewrite_databend_sql(q))
+    return run_databend_sql(spark, q)
 
 # privilege display names in UserPrivilegeType bit order (reference
 # src/meta/app/src/principal/user_privilege.rs:38-80); merged privilege

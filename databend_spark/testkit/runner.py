@@ -1056,6 +1056,8 @@ def run_slt_file(
     skip_patterns: list[str] | None = None,
     isolate: bool = True,
 ) -> SLTReport:
+    from databend_spark.functions.registry import RewriteModes
+    from databend_spark.session import run_databend_sql
     from databend_spark.sqlgen import rewrite_databend_sql
 
     # variant accessor UDF (`->`, get_path, …) — idempotent
@@ -10883,22 +10885,21 @@ def run_slt_file(
                         "[1065] SELECT with no columns: every column "
                         "is excluded"
                     )
-        # VECTOR-typed columns compute distances in float32 — flag the
-        # registry macros when a referenced table declares Vector(N)
-        from databend_spark.functions.registry import VECTOR_F32_MODE
-
-        _vec_mode = False
-        if vector_cols and re.search(
-            r"\b(cosine_distance|l[12]_distance|inner_product"
-            r"|vector_norm)\s*\(",
-            sql,
-            re.I,
-        ):
-            VECTOR_F32_MODE[0] = any(
+        # VECTOR-typed columns compute distances in float32 — set when
+        # a referenced table declares Vector(N)
+        _vec_f32 = bool(
+            vector_cols
+            and re.search(
+                r"\b(cosine_distance|l[12]_distance|inner_product"
+                r"|vector_norm)\s*\(",
+                sql,
+                re.I,
+            )
+            and any(
                 vector_cols.get(t.split(".")[-1].strip("`").lower())
                 for t in re.findall(r"\bfrom\s+([\w.`]+)", sql, re.I)
             )
-            _vec_mode = True
+        )
         _gcols = {
             c
             for d in ddl_decl_types.values()
@@ -10932,8 +10933,6 @@ def run_slt_file(
             )
             if _mt:
                 _stmt_tz = _mt.group(1)
-        from databend_spark.functions.registry import DT_PARSE_MODE
-
         _dt_strict = str(
             setting_overrides.get(
                 "enable_strict_datetime_parser",
@@ -10956,16 +10955,12 @@ def run_slt_file(
                     _dt_strict = _dv == "1"
                 elif _dk.lower() == "enable_auto_detect_datetime_format":
                     _dt_auto = _dv == "1"
-        DT_PARSE_MODE["strict"] = _dt_strict
-        DT_PARSE_MODE["auto"] = _dt_auto
-        try:
-            rewritten = rewrite_databend_sql(sql)
-        finally:
-            if _vec_mode:
-                VECTOR_F32_MODE[0] = False
-            DT_PARSE_MODE["strict"] = False
-            DT_PARSE_MODE["auto"] = False
-        if _stmt_tz and "current_timezone()" in rewritten:
+        modes = RewriteModes(
+            dt_strict=_dt_strict, dt_auto=_dt_auto, vector_f32=_vec_f32
+        )
+        rewritten = rewrite_databend_sql(sql, modes)
+        _tz_bound = _stmt_tz and "current_timezone()" in rewritten
+        if _tz_bound:
             rewritten = rewritten.replace(
                 "current_timezone()", f"'{_stmt_tz}'"
             )
@@ -11000,7 +10995,13 @@ def run_slt_file(
             r"^\s*TRUNCATE\s+(?:TABLE\s+)?([\w.`]+)", sql, re.I
         )
         try:
-            res = spark.sql(rewritten)
+            # a statement-bound timezone is substituted into the rewrite
+            # text, which the executor would rebuild from `sql`
+            res = (
+                spark.sql(rewritten)
+                if _tz_bound
+                else run_databend_sql(spark, sql, modes)
+            )
             if (
                 qcache["enabled"]
                 and qcache["min_secs"] == 0
@@ -11587,50 +11588,6 @@ def run_slt_file(
                             return run_sql(s2)
                         except Exception:  # noqa: BLE001
                             pass
-            if "COLUMN_IS_NOT_VARIANT_TYPE" in msg:
-                # Databend `col:path` reads named tuples AND json — Spark's
-                # native `:` needs true VARIANT. Retry as struct access,
-                # then as get_json_object over the JSON text.
-                from databend_spark.sqlgen import (
-                    variant_paths_to_access,
-                    variant_paths_to_json,
-                    variant_paths_to_struct,
-                )
-
-                for alt in (
-                    variant_paths_to_struct(sql),
-                    variant_paths_to_json(variant_paths_to_access(sql)),
-                    variant_paths_to_json(sql),
-                ):
-                    forced = rewrite_databend_sql(alt)
-                    if forced == rewritten:
-                        continue
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        continue
-            if (
-                "DATATYPE_MISMATCH" in msg or "UNEXPECTED_INPUT_TYPE" in msg
-            ) and re.search(
-                r"\b(?:array_\w+|contains|json_array_\w+)\s*\(", sql, re.I
-            ):
-                # array function over a VARIANT column (textually an
-                # array) — re-rewrite with every array fn forced onto
-                # the __va_* jsonb path
-                from databend_spark.functions.registry import (
-                    VARIANT_ARRAY_MODE,
-                )
-
-                VARIANT_ARRAY_MODE[0] = True
-                try:
-                    forced = rewrite_databend_sql(sql)
-                finally:
-                    VARIANT_ARRAY_MODE[0] = False
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
             if "INVALID_EXTRACT_BASE_FIELD_TYPE" in msg:
                 # a relation alias equal to one of its column names makes
                 # Spark parse `z.z` as field extraction of the COLUMN —
@@ -11648,23 +11605,6 @@ def run_slt_file(
                     )
                     try:
                         return spark.sql(rewrite_databend_sql(alt))
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "LAMBDA_FUNCTION_WITH_PYTHON_UDF" in msg:
-                # a macro expanded to a Python UDF inside a lambda body —
-                # re-rewrite with JVM-only templates
-                from databend_spark.functions.registry import (
-                    LAMBDA_SAFE_MODE,
-                )
-
-                LAMBDA_SAFE_MODE[0] = True
-                try:
-                    forced = rewrite_databend_sql(sql)
-                finally:
-                    LAMBDA_SAFE_MODE[0] = False
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
                     except Exception:  # noqa: BLE001
                         pass
             if (
@@ -11694,25 +11634,6 @@ def run_slt_file(
                 if alt:
                     try:
                         return spark.sql(rewrite_databend_sql(alt))
-                    except Exception:  # noqa: BLE001
-                        pass
-            if (
-                ("DATATYPE_MISMATCH" in msg or "UNEXPECTED_INPUT_TYPE" in msg)
-                and re.search(r"\bget\s*\(", sql, re.I)
-                and re.search(r'has the type "STRING"', msg)
-            ):
-                # get() on a VARIANT column: textually indistinguishable
-                # from array/map get — retry with the JSONB interpretation
-                from databend_spark.functions.registry import VARIANT_GET_MODE
-
-                VARIANT_GET_MODE[0] = True
-                try:
-                    forced = rewrite_databend_sql(sql)
-                finally:
-                    VARIANT_GET_MODE[0] = False
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
                     except Exception:  # noqa: BLE001
                         pass
             if (

@@ -75,6 +75,8 @@ def _data_farm() -> str:
     import shutil as _sh
 
     _sh.rmtree(_DATA_FARM, ignore_errors=True)
+    # without a fixture root the farm is empty but still usable
+    os.makedirs(_DATA_FARM, exist_ok=True)
     count = 0
     for dirp, _dirs, files in os.walk(REF_DATA):
         rel = os.path.relpath(dirp, REF_DATA)

@@ -46,3 +46,36 @@ def test_unsupported_syntax_errors(ctx):
 
     with pytest.raises(UnsupportedSQL):
         ctx.sql("SELECT * FROM t CHANGES(INFORMATION => DEFAULT)")
+
+
+@pytest.fixture(scope="module")
+def json_text(ctx):
+    # VARIANT values stored as JSON text: `v` is textually an array or a
+    # map, so only the executor's type-error retries can read it
+    ctx.spark.createDataFrame(
+        [("[3,1,3]",)], "v string"
+    ).createOrReplaceTempView("__json_text")
+    yield "__json_text"
+    ctx.spark.catalog.dropTempView("__json_text")
+
+
+def test_get_over_json_text(ctx, json_text):
+    out = ctx.sql(f"SELECT get(v, 0) AS g FROM {json_text}").collect()
+    assert [r.g for r in out] == ["3"]
+
+
+def test_array_distinct_over_json_text(ctx, json_text):
+    out = ctx.sql(f"SELECT array_distinct(v) AS d FROM {json_text}").collect()
+    assert [r.d for r in out] == ["[3,1]"]
+
+
+def test_fresh_session_context_runs_dialect_udfs(spark):
+    from databend_spark.session import SessionContext
+
+    # a new session shares the application but none of its UDFs
+    fresh = SessionContext(spark.newSession())
+    out = fresh.sql(
+        "SELECT json_array_length(parse_json('[1,2]')) AS n,"
+        " get_path(parse_json('{\"a\": 7}'), 'a') AS a"
+    ).collect()
+    assert [(r.n, r.a) for r in out] == [(2, "7")]

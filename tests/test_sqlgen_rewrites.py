@@ -180,3 +180,71 @@ def test_any_join_derived_table_probe():
         "ON p.id = t2.id"
     )
     assert "FROM (SELECT * FROM t0) p GROUP BY" in out2
+
+
+# each rewrite mode and the query whose rewrite it changes
+_MODE_QUERIES = {
+    "dt_strict": "SELECT try_to_date(s) FROM t",
+    "dt_auto": "SELECT try_to_date(s) FROM t",
+    "vector_f32": "SELECT cosine_distance(a, b) FROM t",
+    "variant_get": "SELECT get(v, 0) FROM t",
+    "variant_array": "SELECT array_distinct(v) FROM t",
+    "lambda_safe": "SELECT array_transform(a, x -> split(x, ',')) FROM t",
+}
+
+
+def test_each_rewrite_mode_changes_the_rewrite():
+    from databend_spark.sqlgen import RewriteModes
+
+    assert set(_MODE_QUERIES) == set(RewriteModes.__dataclass_fields__)
+    for mode, q in _MODE_QUERIES.items():
+        assert R(q, RewriteModes(**{mode: True})) != R(q), mode
+    assert "__variant_access" in R(
+        "SELECT get(v, 0) FROM t", RewriteModes(variant_get=True)
+    )
+    assert "__va_distinct" in R(
+        "SELECT array_distinct(v) FROM t", RewriteModes(variant_array=True)
+    )
+
+
+def test_default_rewrite_after_forced_rewrite():
+    from databend_spark.sqlgen import RewriteModes
+
+    for mode, q in _MODE_QUERIES.items():
+        default = R(q)
+        R(q, RewriteModes(**{mode: True}))
+        assert R(q) == default, mode
+
+
+def test_rewrite_modes_are_per_thread():
+    import sys
+    import threading
+
+    from databend_spark.sqlgen import RewriteModes
+
+    q = _MODE_QUERIES["variant_get"]
+    forced = RewriteModes(variant_get=True)
+    want = {RewriteModes(): R(q), forced: R(q, forced)}
+    # more threads than cores, each mode on half of them
+    modes = [m for m in want for _ in range(4)]
+    start = threading.Barrier(len(modes))
+    wrong: list[RewriteModes] = []
+
+    def work(m):
+        start.wait()
+        for _ in range(100):
+            if R(q, m) != want[m]:
+                wrong.append(m)
+
+    threads = [threading.Thread(target=work, args=(m,)) for m in modes]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not wrong

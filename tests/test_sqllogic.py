@@ -42,7 +42,9 @@ def _green_files():
 
 
 @pytest.mark.parametrize(
-    "path", _green_files(), ids=lambda p: p.split("suites/")[-1]
+    # str(): with no reference checkout the parameter set is empty and
+    # pytest passes its NOTSET placeholder here
+    "path", _green_files(), ids=lambda p: str(p).split("suites/")[-1]
 )
 def test_slt_file_stays_green(spark, path):
     from databend_spark.testkit import run_slt_file

@@ -1408,8 +1408,7 @@ def _typeof_macro(args: list[str]) -> str | None:
         # replacement strings ride as masked literals so later
         # type-alias / tuple-literal passes can't rewrite them.
         def lit(s: str) -> str:
-            CURRENT_LITERALS.append("'" + s + "'")
-            return f"\x00{len(CURRENT_LITERALS) - 1}\x00"
+            return _mask_literal("'" + s + "'")
 
         expr = f"upper(t\x03ypeof({t}))"
         expr = f"regexp_replace({expr}, {lit('STRUCT<')}, {lit('TUPLE(')})"
@@ -1977,18 +1976,28 @@ _TO_VARIANT = (
 _NUM_RE = "'^-?([0-9]+([.][0-9]*)?|[.][0-9]+)([eE][+-]?[0-9]+)?$'"
 
 
-# masked-literal table for the current rewrite (set by sqlgen around
-# expand_sql_macros) — lets literal-inspecting macros read values
-CURRENT_LITERALS: list[str] = []
+# masked-literal table of the rewrite in progress: only sqlgen sets it,
+# around expand_sql_macros; literal-inspecting macros read values from it
+# and masking macros append to it
+CURRENT_LITERALS: ContextVar[list[str]] = ContextVar("current_literals")
 _MASKED_LIT = re.compile("^\x00(\\d+)\x00$")
 
 
 def _literal_text(arg: str) -> str:
     """Resolve a masked string-literal placeholder to its raw text."""
+    literals = CURRENT_LITERALS.get(())
     m = _MASKED_LIT.match(arg.strip())
-    if m and int(m.group(1)) < len(CURRENT_LITERALS):
-        return CURRENT_LITERALS[int(m.group(1))]
+    if m and int(m.group(1)) < len(literals):
+        return literals[int(m.group(1))]
     return arg
+
+
+def _mask_literal(sql_literal: str) -> str:
+    """Add a quoted SQL literal to the literal table and return its
+    placeholder, so later text passes cannot rewrite it."""
+    literals = CURRENT_LITERALS.get()
+    literals.append(sql_literal)
+    return f"\x00{len(literals) - 1}\x00"
 
 
 def _to_char_dispatch(args: list[str]) -> str:
@@ -2824,8 +2833,7 @@ def _glob_sql(args: list[str]) -> str | None:
         for c in pat
     ) + "$"
     rx_sql = rx.replace("\\", "\\\\").replace("'", "''")
-    CURRENT_LITERALS.append("'" + rx_sql + "'")
-    tok = f"\x00{len(CURRENT_LITERALS) - 1}\x00"
+    tok = _mask_literal("'" + rx_sql + "'")
     return f"(CAST({args[0]} AS STRING) RLIKE {tok})"
 
 
@@ -2873,8 +2881,7 @@ def _regexp_split_sql(args: list[str], explode: bool) -> str | None:
             return None
         flags = flag_lit.strip("'").replace("g", "")
         raw = (f"(?{flags})" if flags else "") + raw
-        CURRENT_LITERALS.append("'" + raw.replace("'", "''") + "'")
-        pat_sql = f"\x00{len(CURRENT_LITERALS) - 1}\x00"
+        pat_sql = _mask_literal("'" + raw.replace("'", "''") + "'")
     base = f"sp\x03lit({args[0]}, {pat_sql})"
     if raw is not None:
         try:

@@ -644,7 +644,7 @@ class SessionContext:
             return 0
         reader = self.spark.read.options(**options)
         df = getattr(reader, fmt)(*fresh)
-        if table in self.tables():
+        if self.spark.catalog.tableExists(table):
             df.write.insertInto(table)
         else:
             df.write.saveAsTable(table)

@@ -17,7 +17,11 @@ from __future__ import annotations
 import json
 import re
 
-from databend_spark.functions.registry import REWRITE_MODES, RewriteModes
+from databend_spark.functions.registry import (
+    CURRENT_LITERALS,
+    REWRITE_MODES,
+    RewriteModes,
+)
 
 _UNSUPPORTED = [
     (re.compile(r"\bCHANGES\s*\(", re.I),
@@ -4992,13 +4996,11 @@ def _rewrite(sql: str) -> str:
     masked = rewrite_function_names(masked)
     # literal-inspecting macros (array_aggregate's op name, array_sort's
     # direction, …) need to see through the masking placeholders
-    from databend_spark.functions import registry as _reg
-
-    _reg.CURRENT_LITERALS = literals
+    token = CURRENT_LITERALS.set(literals)
     try:
         masked = expand_sql_macros(masked)
     finally:
-        _reg.CURRENT_LITERALS = []
+        CURRENT_LITERALS.reset(token)
     if re.search(r"\bexplode\s*\(", masked, re.I):
         masked = _rewrite_srf_post(masked)
     if "__interval_" in masked:

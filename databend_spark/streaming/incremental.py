@@ -14,9 +14,13 @@ Reference semantics being reproduced (file:line in /root/reference):
     target-lag auto-refresh, full or incremental.
   * AT(...) time travel: ``ast/query.rs:568-604``.
 
-Scale notes: the snapshot log holds file lists, not data — O(files)
-JSON. Reads prune to exactly the files in the requested version range,
-so stream reads touch only new data (no diffing of old files). On a
+Scale notes: the snapshot log holds metadata, not data — one entry per
+commit, ``version, dir, ts, mode, schema``: the same metadata a
+reference snapshot carries next to its segment list (the table schema
+rides in the snapshot). Reads prune to exactly the files in the
+requested version range, so stream reads touch only new data (no
+diffing of old files), and a read is planned from the log alone: Spark
+is handed the recorded schema and runs no footer-inference job. On a
 real deployment this maps 1:1 onto Delta/Iceberg commit logs; the
 format here avoids external jars while keeping the same contract.
 """
@@ -31,6 +35,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class VersionedTable:
@@ -57,10 +62,13 @@ class VersionedTable:
             json.dump(log, f)
         os.replace(tmp, self._log_path)  # atomic commit (meta-service analog)
 
+    @staticmethod
+    def _head(log: list[dict]) -> int:
+        return log[-1]["version"] if log else 0
+
     @property
     def version(self) -> int:
-        log = self._read_log()
-        return log[-1]["version"] if log else 0
+        return self._head(self._read_log())
 
     def append(self, df: DataFrame) -> int:
         """Write a new snapshot: immutable data dir + log entry."""
@@ -75,25 +83,33 @@ class VersionedTable:
         return self._commit(df, mode="overwrite")
 
     def _commit(self, df: DataFrame, mode: str) -> int:
+        """Write ``df`` to a new data dir, then append the log entry
+        ``version, dir, ts, mode, schema``. ``schema`` is the written
+        DataFrame's schema (analysed before the write, so recording it
+        runs no job); reads hand it to Spark instead of inferring it."""
         log = self._read_log()
-        version = (log[-1]["version"] + 1) if log else 1
+        version = self._head(log) + 1
         data_dir = os.path.join(self.path, f"v{version}_{uuid.uuid4().hex[:8]}")
         df.write.mode("errorifexists").parquet(data_dir)
         log.append(
-            {"version": version, "dir": data_dir, "ts": time.time(), "mode": mode}
+            {"version": version, "dir": data_dir, "ts": time.time(), "mode": mode,
+             "schema": df.schema.json()}
         )
         self._write_log(log)
         return version
 
     def _dirs(
-        self, from_v: int, to_v: int, as_changes: bool = False
+        self, from_v: int, to_v: int, as_changes: bool = False,
+        log: list[dict] | None = None,
     ) -> list[str]:
         """Data dirs composing version ``to_v``, excluding data already
         present at ``from_v``. A read (``as_changes=False``) starts from
         the last overwrite commit; a change range (``as_changes=True``)
         that crosses an overwrite cannot be represented as appended rows
-        and raises."""
-        entries = [e for e in self._read_log() if e["version"] <= to_v]
+        and raises. ``log`` is the parsed log when the caller holds it."""
+        if log is None:
+            log = self._read_log()
+        entries = [e for e in log if e["version"] <= to_v]
         last_overwrite = 0  # version of the most recent overwrite commit
         for e in entries:
             if e.get("mode", "append") == "overwrite":
@@ -107,13 +123,26 @@ class VersionedTable:
         start = max(from_v, last_overwrite - 1)
         return [e["dir"] for e in entries if start < e["version"]]
 
+    def _scan(self, dirs: list[str], log: list[dict]) -> DataFrame:
+        """Read ``dirs``. When their log entries all record one schema,
+        Spark is given it and runs no job to infer it from a file
+        footer. Otherwise (a log written before schemas were recorded, or
+        a range that mixes schemas) Spark infers it from the files."""
+        wanted = set(dirs)
+        schemas = {e.get("schema") for e in log if e["dir"] in wanted}
+        reader = self.spark.read
+        if len(schemas) == 1 and None not in schemas:
+            reader = reader.schema(StructType.fromJson(json.loads(schemas.pop())))
+        return reader.parquet(*dirs)
+
     def read(self, version: int | None = None) -> DataFrame:
         """Read the table AT a version (time travel); latest by default."""
-        v = self.version if version is None else version
-        dirs = self._dirs(0, v)
+        log = self._read_log()
+        v = self._head(log) if version is None else version
+        dirs = self._dirs(0, v, log=log)
         if not dirs:
             raise ValueError(f"table {self.path} empty at version {v}")
-        return self.spark.read.parquet(*dirs)
+        return self._scan(dirs, log)
 
     def read_at_timestamp(self, ts: float) -> DataFrame:
         """AT (TIMESTAMP => ...) — last version committed ≤ ts."""
@@ -124,11 +153,13 @@ class VersionedTable:
 
     def changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """CHANGES(...) — appended rows in (from_version, to_version]."""
-        to_v = self.version if to_version is None else to_version
-        dirs = self._dirs(from_version, to_v, as_changes=True)
+        log = self._read_log()
+        head = self._head(log)
+        to_v = head if to_version is None else to_version
+        dirs = self._dirs(from_version, to_v, as_changes=True, log=log)
         if not dirs:
-            return self.read(self.version).limit(0)
-        return self.spark.read.parquet(*dirs)
+            return self.read(head).limit(0)
+        return self._scan(dirs, log)
 
     def changes_standard(
         self, from_version: int, to_version: int | None = None
@@ -233,7 +264,7 @@ class VersionedTable:
         needed: set[str] = set()
         for e in log:
             if e["version"] > cutoff:
-                needed.update(self._dirs(0, e["version"]))
+                needed.update(self._dirs(0, e["version"], log=log))
         removed = [e["dir"] for e in log if e["dir"] not in needed]
         kept = [e for e in log if e["dir"] in needed]
         self._write_log(kept)  # atomic commit before touching data
@@ -410,4 +441,4 @@ class DynamicTable:
         log = self.target._read_log()
         if not log:
             raise ValueError("dynamic table never refreshed")
-        return self.spark.read.parquet(log[-1]["dir"])
+        return self.target._scan([log[-1]["dir"]], log)

@@ -59,6 +59,42 @@ def test_copy_into_dedups_file_history(ctx, spark, sample, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_copy_into_mixed_case_table_appends(ctx, spark, sample, tmp_path):
+    """The catalog stores table names lower-cased; a second COPY into
+    ``Mixed_Case`` must find the table the first one created."""
+    p1, p2 = str(tmp_path / "f1"), str(tmp_path / "f2")
+    sample.write.parquet(p1)
+    sample.write.parquet(p2)
+    table = "Mixed_Case"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        assert ctx.copy_into(table, [p1]) == 1
+        assert ctx.copy_into(table, [p2]) == 1
+        assert spark.table(table).count() == 6
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_copy_into_checks_target_without_listing_catalog(
+    ctx, spark, sample, tmp_path, spark_jobs
+):
+    """COPY runs the jobs it needs — the staged file's schema read and
+    the write — and no job to list the catalog."""
+    p1, p2 = str(tmp_path / "f1"), str(tmp_path / "f2")
+    sample.write.parquet(p1)
+    sample.write.parquet(p2)
+    table = "copy_jobs_test"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        for path in (p1, p2):  # create, then insert into the existing table
+            n, jobs = spark_jobs(lambda: ctx.copy_into(table, [path]))
+            assert n == 1
+            assert len(jobs) == 2, jobs
+            assert not any(name.startswith("listTables") for j in jobs for name in j)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 def test_system_tables(ctx):
     tables = {r.name for r in ctx.system("tables").collect()}
     assert "lineitem" in tables

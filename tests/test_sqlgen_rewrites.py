@@ -216,27 +216,19 @@ def test_default_rewrite_after_forced_rewrite():
         assert R(q) == default, mode
 
 
-def test_rewrite_modes_are_per_thread():
+def _race(work, args: list) -> None:
+    """Run ``work(arg)`` on one thread per arg, all released together,
+    with the interpreter switching threads as often as it can."""
     import sys
     import threading
 
-    from databend_spark.sqlgen import RewriteModes
+    start = threading.Barrier(len(args))
 
-    q = _MODE_QUERIES["variant_get"]
-    forced = RewriteModes(variant_get=True)
-    want = {RewriteModes(): R(q), forced: R(q, forced)}
-    # more threads than cores, each mode on half of them
-    modes = [m for m in want for _ in range(4)]
-    start = threading.Barrier(len(modes))
-    wrong: list[RewriteModes] = []
-
-    def work(m):
+    def run(a):
         start.wait()
-        for _ in range(100):
-            if R(q, m) != want[m]:
-                wrong.append(m)
+        work(a)
 
-    threads = [threading.Thread(target=work, args=(m,)) for m in modes]
+    threads = [threading.Thread(target=run, args=(a,)) for a in args]
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
@@ -247,4 +239,38 @@ def test_rewrite_modes_are_per_thread():
     finally:
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
+
+
+def test_rewrite_modes_are_per_thread():
+    from databend_spark.sqlgen import RewriteModes
+
+    q = _MODE_QUERIES["variant_get"]
+    forced = RewriteModes(variant_get=True)
+    want = {RewriteModes(): R(q), forced: R(q, forced)}
+    wrong: list[RewriteModes] = []
+
+    def work(m):
+        for _ in range(100):
+            if R(q, m) != want[m]:
+                wrong.append(m)
+
+    # more threads than cores, each mode on half of them
+    _race(work, [m for m in want for _ in range(4)])
+    assert not wrong
+
+
+def test_literal_tables_are_per_thread():
+    """array_aggregate reads its operation name from the masked-literal
+    table; concurrent rewrites must each see their own table."""
+    queries = [f"SELECT array_aggregate(a, '{op}') FROM t" for op in ("max", "sum")]
+    want = {q: R(q) for q in queries}
+    assert len(set(want.values())) == 2
+    wrong: list[str] = []
+
+    def work(q):
+        for _ in range(100):
+            if R(q) != want[q]:
+                wrong.append(q)
+
+    _race(work, [q for q in queries for _ in range(4)])
     assert not wrong

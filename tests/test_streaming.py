@@ -283,3 +283,98 @@ def test_stateful_user_stats_accumulates_across_batches(spark, sf_dir, tmp_path)
         for r in events.groupBy("user_id").agg(F.count("*").alias("n")).collect()
     }
     assert got == want and len(want) > 0
+
+
+# -- the snapshot log records each commit's schema --------------------------
+
+_RICH = """SELECT id, CAST(id * 1.25 AS DECIMAL(15,2)) AS d,
+    TIMESTAMP'2024-01-02 03:04:05' + make_interval(0, 0, 0, id) AS ts,
+    TIMESTAMP_NTZ'2024-01-02 03:04:05' AS tsn, DATE'2024-01-02' AS dt,
+    array(id, id + 1) AS arr, map('k', id) AS m,
+    named_struct('x', id, 'y', CAST(id AS STRING)) AS st,
+    CAST(NULL AS STRING) AS n
+    FROM VALUES (1), (2), (3) AS v(id)"""
+
+
+def _assert_reads_like_parquet(spark, vt):
+    """The table reads with the schema and rows Spark infers from its
+    files (metadata included)."""
+    inferred = spark.read.parquet(*vt._dirs(0, vt.version))
+    got = vt.read()
+    assert got.schema == inferred.schema
+    assert got.orderBy("id").collect() == inferred.orderBy("id").collect()
+
+
+def test_recorded_schema_matches_files_after_each_commit(spark, vt):
+    from databend_spark.operators.mutations import (
+        delete_from,
+        merge_into,
+        src,
+        update_table,
+    )
+
+    rich = spark.sql(_RICH).withColumn(
+        "c", F.col("id").alias("c", metadata={"comment": "kept"}))
+    vt.append(rich)
+    assert vt.read().schema["c"].metadata == {"comment": "kept"}
+    _assert_reads_like_parquet(spark, vt)
+    vt.append(rich.withColumn("id", F.col("id") + 3))
+    _assert_reads_like_parquet(spark, vt)
+    update_table(vt, F.col("id") == 2, {"d": F.lit(9.5).cast("decimal(15,2)")})
+    _assert_reads_like_parquet(spark, vt)
+    source = vt.read().filter("id IN (1, 4)").withColumn("id", F.col("id") * 10)
+    merge_into(vt, source.union(vt.read().filter("id = 3")), on=["id"],
+               when_matched_update={"n": src("n")})
+    _assert_reads_like_parquet(spark, vt)
+    delete_from(vt, F.col("id") == 5)
+    _assert_reads_like_parquet(spark, vt)
+    vt.compact()
+    _assert_reads_like_parquet(spark, vt)
+    assert all("schema" in e for e in vt._read_log())
+
+
+def test_log_without_schemas_still_reads(spark, vt):
+    import json
+
+    vt.append(_df(spark, [(1, "a")]))
+    vt.append(_df(spark, [(2, "b")]))
+    log = vt._read_log()
+    for e in log:
+        del e["schema"]  # the log format before schemas were recorded
+    with open(vt._log_path, "w") as f:
+        json.dump(log, f)
+    _assert_reads_like_parquet(spark, vt)
+    assert {r.id for r in vt.changes(1).collect()} == {2}
+
+
+def test_range_mixing_schemas_reads_as_inferred(spark, vt):
+    vt.append(_df(spark, [(1, "a")]))
+    vt.append(spark.createDataFrame([(2, "b", 2.5)], "id int, v string, w double"))
+    dirs = vt._dirs(0, vt.version)
+    inferred = spark.read.parquet(*dirs)
+    assert vt.read().schema == inferred.schema
+    assert sorted(vt.read().collect()) == sorted(inferred.collect())
+
+
+def test_reads_plan_without_spark_jobs(spark, vt, tmp_path, spark_jobs):
+    """Building the DataFrame of a read runs no Spark job: the schema
+    comes from the log, not from a parquet footer."""
+    from databend_spark.streaming import DynamicTable, Stream
+
+    vt.append(_df(spark, [(1, "a")]))
+    vt.append(_df(spark, [(2, "b")]))
+    stream = Stream(vt, "pin", at_version=1)
+    dyn = DynamicTable(spark, vt, str(tmp_path / "mv"),
+                       query=lambda df: df.groupBy("v").count(), mode="full")
+    dyn.refresh()
+    reads = {
+        "read": vt.read,
+        "read_version": lambda: vt.read(version=1),
+        "changes": lambda: vt.changes(1),
+        "stream": stream.read,
+        "dynamic_full": dyn.read,
+    }
+    for name, build in reads.items():
+        df, jobs = spark_jobs(build)
+        assert jobs == [], name
+        assert df.count() > 0, name

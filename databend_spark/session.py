@@ -637,9 +637,13 @@ class SessionContext:
         """Bulk load with file-history dedup, like the reference's COPY
         (``src/query/service/src/physical_plans/physical_copy_into_table.rs``
         lists stage files and dedups against copy history). Returns number
-        of files actually loaded."""
-        seen = self._copy_history.setdefault(table, set())
-        fresh = [p for p in paths if p not in seen]
+        of files actually loaded. The history is keyed by the table name
+        as the catalog resolves it, and a path repeated in ``paths``
+        loads once."""
+        case_sensitive = self.spark.conf.get("spark.sql.caseSensitive").lower() == "true"
+        key = table if case_sensitive else table.lower()
+        seen = self._copy_history.setdefault(key, set())
+        fresh = [p for p in dict.fromkeys(paths) if p not in seen]
         if not fresh:
             return 0
         reader = self.spark.read.options(**options)

@@ -23,12 +23,20 @@ diffing of old files), and a read is planned from the log alone: Spark
 is handed the recorded schema and runs no footer-inference job. On a
 real deployment this maps 1:1 onto Delta/Iceberg commit logs; the
 format here avoids external jars while keeping the same contract.
+
+The log entry is the commit point, so data dirs carry no Hadoop
+``_SUCCESS`` marker. Several entries may name one dir: compacting a
+version that is already compact (one dir whose files a rewrite could
+not reduce) commits a new entry over the existing dir and writes no
+data, as a reference snapshot may point at segments that already
+exist. ``vacuum`` keeps a dir while any retained entry names it.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Callable
@@ -82,21 +90,35 @@ class VersionedTable:
         stay readable via time travel."""
         return self._commit(df, mode="overwrite")
 
-    def _commit(self, df: DataFrame, mode: str) -> int:
+    def _commit(self, df: DataFrame, mode: str, log: list[dict] | None = None) -> int:
         """Write ``df`` to a new data dir, then append the log entry
         ``version, dir, ts, mode, schema``. ``schema`` is the written
         DataFrame's schema (analysed before the write, so recording it
-        runs no job); reads hand it to Spark instead of inferring it."""
-        log = self._read_log()
+        runs no job); reads hand it to Spark instead of inferring it.
+        The log entry is the commit point: the dir gets no ``_SUCCESS``
+        marker, and a write that raises removes its dir before the error
+        propagates. ``log`` is the parsed log when the caller holds it."""
+        if log is None:
+            log = self._read_log()
         version = self._head(log) + 1
         data_dir = os.path.join(self.path, f"v{version}_{uuid.uuid4().hex[:8]}")
-        df.write.mode("errorifexists").parquet(data_dir)
+        try:
+            (df.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+             .mode("errorifexists").parquet(data_dir))
+        except BaseException:
+            shutil.rmtree(data_dir, ignore_errors=True)
+            raise
+        self._append_entry(log, data_dir, mode, df.schema.json())
+        return version
+
+    def _append_entry(
+        self, log: list[dict], data_dir: str, mode: str, schema: str | None
+    ) -> None:
         log.append(
-            {"version": version, "dir": data_dir, "ts": time.time(), "mode": mode,
-             "schema": df.schema.json()}
+            {"version": self._head(log) + 1, "dir": data_dir, "ts": time.time(),
+             "mode": mode, "schema": schema}
         )
         self._write_log(log)
-        return version
 
     def _dirs(
         self, from_v: int, to_v: int, as_changes: bool = False,
@@ -230,32 +252,57 @@ class VersionedTable:
         ).filter("version > 0")
 
     def compact(self, cluster_by: list[str] | None = None) -> int:
-        """OPTIMIZE TABLE ... COMPACT analog: rewrite the currently
-        visible rows as one commit so reads touch one data dir instead of
-        the whole append chain. With ``cluster_by``, also RECLUSTER:
+        """OPTIMIZE TABLE ... COMPACT analog: commit the currently visible
+        rows as one overwrite snapshot so reads touch one data dir instead
+        of the whole append chain. With ``cluster_by``, also RECLUSTER:
         range-partition + sort-within-partitions so parquet row-group
         min/max stats prune (reference hilbert/linear recluster,
         ``storages/fuse/src/operations/recluster.rs``).
+
+        Without ``cluster_by``, a version that already reads one dir
+        holding no more data files than its read has partitions (a
+        rewrite would write as many files) is compact: the new snapshot
+        names that dir with the head entry's schema, and no Spark job
+        runs — like the reference's compaction, which rewrites only
+        blocks below its size thresholds. Every other case rewrites the
+        rows into a new dir. Returns the new version.
 
         Divergence from the reference: streams whose offset predates the
         compaction lose the appended-rows representation (our model has
         no row-level change tracking), so ``changes()`` across a compact
         raises — consume streams before compacting."""
-        df = self.read()
+        log = self._read_log()
+        head = self._head(log)
+        dirs = self._dirs(0, head, log=log)
+        if not dirs:
+            raise ValueError(f"table {self.path} empty at version {head}")
+        if not cluster_by and len(dirs) == 1 and self._is_compact(dirs[0], log):
+            # one dir means the head entry names it (and holds its schema)
+            self._append_entry(log, dirs[0], "overwrite", log[-1].get("schema"))
+            return head + 1
+        df = self._scan(dirs, log)
         if cluster_by:
             df = df.repartitionByRange(
                 self.spark.sparkContext.defaultParallelism, *cluster_by
             ).sortWithinPartitions(*cluster_by)
-        return self._commit(df, mode="overwrite")
+        return self._commit(df, mode="overwrite", log=log)
+
+    def _is_compact(self, data_dir: str, log: list[dict]) -> bool:
+        """A rewrite of ``data_dir`` writes one file per partition of its
+        read, so it saves nothing when the dir holds no more data files
+        than that. The partition count is planned on the driver and runs
+        no job; a one-file dir needs no planning."""
+        files = sum(1 for f in os.listdir(data_dir) if not f.startswith(("_", ".")))
+        return files <= 1 or files <= self._scan([data_dir], log).rdd.getNumPartitions()
 
     def vacuum(self, retain_last: int = 1) -> list[str]:
         """VACUUM analog (``operations/gc.rs``): drop data dirs that no
         retained version can read. Keeps the last ``retain_last``
         versions readable; time travel to older versions then errors
         (exactly the reference's behavior once snapshots are gc'd).
-        Returns the removed dirs."""
-        import shutil
-
+        Entries may share a dir (a metadata-only compaction): a dir is
+        kept while any retained version reads it, and so is every entry
+        naming it. Returns the removed dirs, each once."""
         log = self._read_log()
         if not log:
             return []
@@ -265,7 +312,7 @@ class VersionedTable:
         for e in log:
             if e["version"] > cutoff:
                 needed.update(self._dirs(0, e["version"], log=log))
-        removed = [e["dir"] for e in log if e["dir"] not in needed]
+        removed = list(dict.fromkeys(e["dir"] for e in log if e["dir"] not in needed))
         kept = [e for e in log if e["dir"] in needed]
         self._write_log(kept)  # atomic commit before touching data
         for d in removed:

@@ -279,3 +279,29 @@ def test_distributed_copy_decode(spark, tmp_path):
         for f in files
         if f != bad
     )
+
+
+def test_copy_into_history_follows_resolved_table_name(ctx, spark, sample, tmp_path):
+    """Spark resolves ``Copy_Case`` and ``copy_case`` to one table, so a
+    file loaded through one name is not loaded again through the other."""
+    p1 = str(tmp_path / "f1")
+    sample.write.parquet(p1)
+    spark.sql("DROP TABLE IF EXISTS copy_case")
+    try:
+        assert ctx.copy_into("Copy_Case", [p1]) == 1
+        assert ctx.copy_into("copy_case", [p1]) == 0
+        assert spark.table("copy_case").count() == 3
+    finally:
+        spark.sql("DROP TABLE IF EXISTS copy_case")
+
+
+def test_copy_into_loads_a_repeated_path_once(ctx, spark, sample, tmp_path):
+    p1, p2 = str(tmp_path / "f1"), str(tmp_path / "f2")
+    sample.write.parquet(p1)
+    sample.write.parquet(p2)
+    spark.sql("DROP TABLE IF EXISTS copy_repeat")
+    try:
+        assert ctx.copy_into("copy_repeat", [p1, p2, p1]) == 2
+        assert spark.table("copy_repeat").count() == 6
+    finally:
+        spark.sql("DROP TABLE IF EXISTS copy_repeat")

@@ -378,3 +378,103 @@ def test_reads_plan_without_spark_jobs(spark, vt, tmp_path, spark_jobs):
         df, jobs = spark_jobs(build)
         assert jobs == [], name
         assert df.count() > 0, name
+
+
+# -- commits write only what the snapshot needs -----------------------------
+
+
+def _data_dirs(vt):
+    import os
+
+    return {d for d in os.listdir(vt.path) if not d.startswith("_")}
+
+
+def test_compacting_one_file_version_commits_metadata_only(spark, vt, spark_jobs):
+    vt.append(_df(spark, [(1, "a"), (2, "b"), (3, "c")]).coalesce(1))
+    dirs, rows = _data_dirs(vt), sorted(vt.read().collect())
+    v, jobs = spark_jobs(vt.compact)
+    assert (v, jobs) == (2, [])
+    assert vt.version == 2 and _data_dirs(vt) == dirs
+    assert sorted(vt.read().collect()) == rows
+    head, writer = vt._read_log()[-1], vt._read_log()[0]
+    assert head["mode"] == "overwrite"
+    assert (head["dir"], head["schema"]) == (writer["dir"], writer["schema"])
+
+
+@pytest.fixture()
+def packed_scan_partitions(spark):
+    """Small files share one read partition, so a one-dir version can
+    hold more files than its read has partitions."""
+    confs = {"spark.sql.files.openCostInBytes": "0", "spark.sql.files.minPartitionNum": "1"}
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, val in confs.items():
+        spark.conf.set(k, val)
+    yield
+    for k, val in old.items():
+        if val is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, val)
+
+
+@pytest.mark.parametrize("case", ["append_chain", "cluster_by", "files_over_partitions"])
+def test_compaction_that_reduces_files_rewrites(
+    spark, vt, spark_jobs, packed_scan_partitions, case
+):
+    rows = [(i, f"r{i}") for i in range(4)]
+    if case == "append_chain":
+        for r in rows:
+            vt.append(_df(spark, [r]).coalesce(1))
+    elif case == "cluster_by":
+        vt.append(_df(spark, rows).coalesce(1))
+    else:
+        vt.overwrite(_df(spark, rows).repartition(4))
+    dirs, head = _data_dirs(vt), vt.version
+    cluster_by = ["id"] if case == "cluster_by" else None
+    v, jobs = spark_jobs(lambda: vt.compact(cluster_by=cluster_by))
+    assert v == head + 1
+    if case == "cluster_by":  # the range sample and the shuffle run jobs too
+        assert jobs
+    else:
+        assert len(jobs) == 1, jobs
+    new_dirs = _data_dirs(vt) - dirs
+    assert len(new_dirs) == 1
+    assert vt._read_log()[-1]["dir"].endswith(new_dirs.pop())
+    assert sorted(vt.read().collect()) == rows
+
+
+def test_shared_dir_survives_vacuum_and_keeps_versions(spark, vt):
+    from databend_spark.operators.mutations import update_table
+
+    vt.append(_df(spark, [(1, "a"), (2, "b")]).coalesce(1))
+    vt.compact()                                    # v2 names v1's dir
+    assert vt.vacuum(retain_last=1) == []           # v2 still reads it
+    first_dir = vt._read_log()[0]["dir"]
+    update_table(vt, F.col("id") == 2, {"v": F.lit("z")})   # v3
+    vt.compact()                                    # v4 names v3's dir
+    shared = vt._read_log()[-1]["dir"]
+    assert vt.vacuum(retain_last=1) == [first_dir]  # named by v1 and v2, once
+    assert [e["version"] for e in vt._read_log()] == [3, 4]
+    for v in (3, 4):
+        assert sorted(vt.read(version=v).collect()) == [(1, "a"), (2, "z")], v
+    assert _data_dirs(vt) == {shared.rsplit("/", 1)[-1]}
+
+
+def test_commit_dirs_have_no_success_marker(spark, vt):
+    import os
+
+    vt.append(_df(spark, [(1, "a")]))
+    vt.overwrite(_df(spark, [(2, "b")]))
+    for e in vt._read_log():
+        assert not {"_SUCCESS", "._SUCCESS.crc"} & set(os.listdir(e["dir"]))
+
+
+def test_failed_commit_removes_its_dir(spark, vt):
+    vt.append(_df(spark, [(1, "a")]))
+    dirs = _data_dirs(vt)
+    bad = spark.range(3).select(
+        F.col("id").cast("int"), F.raise_error(F.lit("boom")).cast("string").alias("v"))
+    with pytest.raises(Exception, match="boom"):
+        vt.append(bad)
+    assert vt.version == 1
+    assert _data_dirs(vt) == dirs

@@ -637,20 +637,35 @@ class SessionContext:
         """Bulk load with file-history dedup, like the reference's COPY
         (``src/query/service/src/physical_plans/physical_copy_into_table.rs``
         lists stage files and dedups against copy history). Returns number
-        of files actually loaded. The history is keyed by the table name
-        as the catalog resolves it, and a path repeated in ``paths``
-        loads once."""
-        case_sensitive = self.spark.conf.get("spark.sql.caseSensitive").lower() == "true"
-        key = table if case_sensitive else table.lower()
-        seen = self._copy_history.setdefault(key, set())
+        of files actually loaded. The history belongs to the table the
+        catalog resolves ``table`` to (any spelling of its name shares it),
+        starts empty when COPY creates the table, and a path repeated in
+        ``paths`` loads once."""
+        key = self._catalog_name(table)
+        exists = self.spark.catalog.tableExists(table)
+        seen = self._copy_history.get(key, set()) if exists else set()
         fresh = [p for p in dict.fromkeys(paths) if p not in seen]
         if not fresh:
             return 0
         reader = self.spark.read.options(**options)
         df = getattr(reader, fmt)(*fresh)
-        if self.spark.catalog.tableExists(table):
+        if exists:
             df.write.insertInto(table)
         else:
             df.write.saveAsTable(table)
-        seen.update(fresh)
+        self._copy_history[key] = seen | set(fresh)
         return len(fresh)
+
+    def _catalog_name(self, table: str) -> str:
+        """The session catalog's qualified name for ``table``, case-folded
+        as the catalog folds it: ``t``, ``DEFAULT.T`` and
+        ``spark_catalog.default.t`` give one name. This engine registers
+        no catalog but the session catalog. Runs no job."""
+        state = self.spark._jsparkSession.sessionState()
+        parser = state.sqlParser()
+        parts = parser.parseMultipartIdentifier(table)
+        n = parts.length()
+        db_table = ".".join(  # drop a catalog part
+            "`" + parts.apply(i).replace("`", "``") + "`" for i in range(max(0, n - 2), n))
+        ident = parser.parseTableIdentifier(db_table)
+        return state.catalog().qualifyIdentifier(ident).quotedString()

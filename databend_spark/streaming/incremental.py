@@ -26,10 +26,10 @@ format here avoids external jars while keeping the same contract.
 
 The log entry is the commit point, so data dirs carry no Hadoop
 ``_SUCCESS`` marker. Several entries may name one dir: compacting a
-version that is already compact (one dir whose files a rewrite could
-not reduce) commits a new entry over the existing dir and writes no
-data, as a reference snapshot may point at segments that already
-exist. ``vacuum`` keeps a dir while any retained entry names it.
+version that is already compact (one dir holding one data file)
+commits a new entry over the existing dir and writes no data, as a
+reference snapshot may point at segments that already exist.
+``vacuum`` keeps a dir while any retained entry names it.
 """
 
 from __future__ import annotations
@@ -44,6 +44,11 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+
+def _data_files(data_dir: str) -> int:
+    """Data files in a commit dir (Hadoop's ``_``/``.`` side files aside)."""
+    return sum(1 for f in os.listdir(data_dir) if not f.startswith(("_", ".")))
 
 
 class VersionedTable:
@@ -260,12 +265,12 @@ class VersionedTable:
         ``storages/fuse/src/operations/recluster.rs``).
 
         Without ``cluster_by``, a version that already reads one dir
-        holding no more data files than its read has partitions (a
-        rewrite would write as many files) is compact: the new snapshot
-        names that dir with the head entry's schema, and no Spark job
-        runs — like the reference's compaction, which rewrites only
-        blocks below its size thresholds. Every other case rewrites the
-        rows into a new dir. Returns the new version.
+        holding one data file is compact: the new snapshot names that dir
+        with the head entry's schema, and no Spark job runs (the check
+        only lists the dir) — like the reference's compaction, which rewrites
+        only blocks below its size thresholds. Every other case (an
+        append chain, ``cluster_by``, a dir of several files) rewrites
+        the rows into a new dir. Returns the new version.
 
         Divergence from the reference: streams whose offset predates the
         compaction lose the appended-rows representation (our model has
@@ -276,7 +281,7 @@ class VersionedTable:
         dirs = self._dirs(0, head, log=log)
         if not dirs:
             raise ValueError(f"table {self.path} empty at version {head}")
-        if not cluster_by and len(dirs) == 1 and self._is_compact(dirs[0], log):
+        if not cluster_by and len(dirs) == 1 and _data_files(dirs[0]) <= 1:
             # one dir means the head entry names it (and holds its schema)
             self._append_entry(log, dirs[0], "overwrite", log[-1].get("schema"))
             return head + 1
@@ -286,14 +291,6 @@ class VersionedTable:
                 self.spark.sparkContext.defaultParallelism, *cluster_by
             ).sortWithinPartitions(*cluster_by)
         return self._commit(df, mode="overwrite", log=log)
-
-    def _is_compact(self, data_dir: str, log: list[dict]) -> bool:
-        """A rewrite of ``data_dir`` writes one file per partition of its
-        read, so it saves nothing when the dir holds no more data files
-        than that. The partition count is planned on the driver and runs
-        no job; a one-file dir needs no planning."""
-        files = sum(1 for f in os.listdir(data_dir) if not f.startswith(("_", ".")))
-        return files <= 1 or files <= self._scan([data_dir], log).rdd.getNumPartitions()
 
     def vacuum(self, retain_last: int = 1) -> list[str]:
         """VACUUM analog (``operations/gc.rs``): drop data dirs that no

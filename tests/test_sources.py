@@ -305,3 +305,29 @@ def test_copy_into_loads_a_repeated_path_once(ctx, spark, sample, tmp_path):
         assert spark.table("copy_repeat").count() == 6
     finally:
         spark.sql("DROP TABLE IF EXISTS copy_repeat")
+
+
+def test_copy_into_history_follows_qualified_table_name(ctx, spark, sample, tmp_path):
+    """``t`` and ``default.t`` name one table, so they share one history."""
+    p1 = str(tmp_path / "f1")
+    sample.write.parquet(p1)
+    spark.sql("DROP TABLE IF EXISTS copy_qualified")
+    try:
+        assert ctx.copy_into("copy_qualified", [p1]) == 1
+        assert ctx.copy_into("default.copy_qualified", [p1]) == 0
+        assert spark.table("copy_qualified").count() == 3
+    finally:
+        spark.sql("DROP TABLE IF EXISTS copy_qualified")
+
+
+def test_copy_into_recreated_table_starts_a_new_history(ctx, spark, sample, tmp_path):
+    p1 = str(tmp_path / "f1")
+    sample.write.parquet(p1)
+    spark.sql("DROP TABLE IF EXISTS copy_recreated")
+    try:
+        assert ctx.copy_into("copy_recreated", [p1]) == 1
+        spark.sql("DROP TABLE copy_recreated")
+        assert ctx.copy_into("copy_recreated", [p1]) == 1
+        assert spark.table("copy_recreated").count() == 3
+    finally:
+        spark.sql("DROP TABLE IF EXISTS copy_recreated")

@@ -401,26 +401,8 @@ def test_compacting_one_file_version_commits_metadata_only(spark, vt, spark_jobs
     assert (head["dir"], head["schema"]) == (writer["dir"], writer["schema"])
 
 
-@pytest.fixture()
-def packed_scan_partitions(spark):
-    """Small files share one read partition, so a one-dir version can
-    hold more files than its read has partitions."""
-    confs = {"spark.sql.files.openCostInBytes": "0", "spark.sql.files.minPartitionNum": "1"}
-    old = {k: spark.conf.get(k, None) for k in confs}
-    for k, val in confs.items():
-        spark.conf.set(k, val)
-    yield
-    for k, val in old.items():
-        if val is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, val)
-
-
-@pytest.mark.parametrize("case", ["append_chain", "cluster_by", "files_over_partitions"])
-def test_compaction_that_reduces_files_rewrites(
-    spark, vt, spark_jobs, packed_scan_partitions, case
-):
+@pytest.mark.parametrize("case", ["append_chain", "cluster_by", "multi_file_dir"])
+def test_compacting_a_version_that_is_not_one_file_rewrites(spark, vt, spark_jobs, case):
     rows = [(i, f"r{i}") for i in range(4)]
     if case == "append_chain":
         for r in rows:
